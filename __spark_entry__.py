@@ -5442,17 +5442,20 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q_quantized_topk": """
             -- symbolic replay of the SQ8 kernel: floor(x*127/max|x|) int8
-            -- quantization, exact integer dot/norms (values <= 64*127^2 so
-            -- DOUBLE carries them exactly), one float division at the end.
+            -- quantization clamped to ±127, exact integer dot/norms (values
+            -- <= 64*127^2 so DOUBLE carries them exactly), one float
+            -- division at the end.
             WITH q AS (
               SELECT vec_id,
                      CASE WHEN list_max(list_transform(embedding,
                                 x -> abs(CAST(x AS DOUBLE)))) = 0
                           THEN list_transform(embedding, x -> 0.0)
                           ELSE list_transform(embedding,
-                                 x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                                 x -> least(greatest(
+                                      floor(CAST(x AS DOUBLE) * 127.0 /
                                       list_max(list_transform(embedding,
-                                        y -> abs(CAST(y AS DOUBLE))))))
+                                        y -> abs(CAST(y AS DOUBLE))))),
+                                      -127), 127))
                      END AS qvecd
               FROM embeddings
             ), n AS (
@@ -5503,9 +5506,11 @@ def oracle_sql() -> dict[str, str]:
                                 x -> abs(CAST(x AS DOUBLE)))) = 0
                           THEN list_transform(embedding, x -> 0.0)
                           ELSE list_transform(embedding,
-                                 x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                                 x -> least(greatest(
+                                      floor(CAST(x AS DOUBLE) * 127.0 /
                                       list_max(list_transform(embedding,
-                                        y -> abs(CAST(y AS DOUBLE))))))
+                                        y -> abs(CAST(y AS DOUBLE))))),
+                                      -127), 127))
                      END AS qvecd
               FROM embeddings
             ), n AS (
@@ -7031,7 +7036,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT url, max(_d) AS _d, max(_c) AS _c FROM tagged GROUP BY 1
             ), agg AS (
               SELECT lower(regexp_extract(url,
-                       '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1)) AS host,
+                       '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
                      CAST(sum(_d) AS BIGINT) AS declared_n,
                      CAST(sum(_c) AS BIGINT) AS crawled_n,
                      CAST(sum(_d * _c) AS BIGINT) AS both_n

@@ -1554,12 +1554,20 @@ def mixture_plan(
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("weight_ppm", F.lit(0)).cast("long").alias("weight_ppm"),
     )
-    planned = F.expr(f"{int(target_total_tokens)}L * weight_ppm div 1000000")
+    # the products go through DECIMAL(38,0): target · weight and planned ·
+    # 10^6 overflow BIGINT (an ANSI error) once the target passes ~9.2e12
+    planned = F.expr(
+        f"CAST(CAST({int(target_total_tokens)} AS DECIMAL(38,0)) * weight_ppm"
+        " div 1000000 AS BIGINT)"
+    )
     return (
         joined.withColumn("planned_tokens", planned)
         .withColumn(
             "epochs_ppm",
-            F.expr("planned_tokens * 1000000 div nullif(n_tokens, 0)"),
+            F.expr(
+                "CAST(CAST(planned_tokens AS DECIMAL(38,0)) * 1000000"
+                " div nullif(n_tokens, 0) AS BIGINT)"
+            ),
         )
         .withColumn(
             "repeated",

@@ -9,6 +9,8 @@ deliberately restricted to the portable subset (ASCII classes, md5).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
@@ -854,8 +856,21 @@ def term_blocklist_flags(
     term list rides the plan as ONE array literal (hundreds of terms —
     C4's list is ~400 — cost nothing as codegen); for a 10^6-term
     lexicon, switch to the explode + broadcast semi-join form instead of
-    growing the literal.  Pure projection: zero shuffle, zero Python."""
+    growing the literal.  Pure projection: zero shuffle, zero Python.
+
+    An empty term list blocks nothing.  A term that is not one token after
+    lowercasing (a phrase, punctuation, non-ASCII letters) could never
+    match, so it raises ``ValueError`` instead of being ignored."""
     tl = sorted({t.lower() for t in terms})
+    for t in tl:
+        if not re.fullmatch(r"[a-z0-9]+", t):
+            raise ValueError(
+                f"blocklist term {t!r} is not one [a-z0-9] token; it can never match"
+            )
+    if not tl:
+        return docs.select(
+            "doc_id", F.lit(False).alias("blocked"), F.lit("").alias("blocked_term")
+        )
     toks = F.filter(
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^a-z0-9]+"),
         lambda x: F.length(x) > 0,

@@ -28,6 +28,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, functions as F
 
 _REG_DOMAIN_RE = r"([^.]+\.[^.]+)$"
+# URL schemes are case-insensitive (RFC 3986 §3.1): HTTPS://a.com is a.com
+_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
 
 
 def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -1034,7 +1036,7 @@ def sitemap_coverage(declared: DataFrame, crawled: DataFrame) -> DataFrame:
     ONE tiny groupBy(host) rolls up; at 10^12 urls that is a single wide
     shuffle on url (the join formulation shuffles both sides AND
     re-shuffles the joined rows for the host rollup)."""
-    host = F.lower(F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
+    host = F.lower(F.regexp_extract(F.col("url"), _SCHEME_RE + r"([^/?#]+)", 1))
     tagged = declared.select(
         "url", F.lit(1).alias("_d"), F.lit(0).alias("_c")
     ).unionByName(crawled.select("url", F.lit(0).alias("_d"), F.lit(1).alias("_c")))
@@ -1078,8 +1080,8 @@ def mirror_candidates(
     self-join keyed on path with host_a < host_b, then Jaccard over the
     hosts' capped path sets in basis points.  Returns
     (host_a, host_b, shared_paths, jaccard_bp), shared ≥ ``min_shared``."""
-    host = F.lower(F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
-    path = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
+    host = F.lower(F.regexp_extract(F.col(url_col), _SCHEME_RE + r"([^/?#]+)", 1))
+    path = F.regexp_extract(F.col(url_col), _SCHEME_RE + r"[^/?#]+([^?#]*)", 1)
     postings = (
         pages.select(host.alias("host"), path.alias("path"))
         .filter((F.col("host") != "") & (F.col("path") != ""))

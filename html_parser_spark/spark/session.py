@@ -6,7 +6,7 @@ matter identically on a 1000-executor cluster:
 * AQE on (runtime shuffle-partition coalescing + skew-join splitting);
 * Arrow enabled with a LOW max batch size — parse-kernel rows carry whole
   HTML blobs (10KB-1MB each), so the default 10k-records batch would
-  materialize gigabytes per Python worker; 256 rows ≈ tens of MB;
+  materialize gigabytes per Python worker; 64 rows cap a batch at ~64 MB;
 * shuffle partitions sized to cores (overridden by AQE coalescing);
 * parquet files split at 64MB so a 100TB scan yields ~1.6M well-sized tasks.
 """

@@ -1048,3 +1048,23 @@ def test_mixture_plan_epochs_and_repeat_flag(spark):
     assert (code["weight_ppm"], code["planned_tokens"], code["epochs_ppm"]) == (
         0, 0, 0,
     )
+
+
+def test_mixture_plan_multi_trillion_target_is_exact(spark):
+    from html_parser_spark.ops.corpus import mixture_plan
+
+    # 2e13 · weight and planned · 10^6 both exceed BIGINT: they must not
+    # raise ARITHMETIC_OVERFLOW, and the integral divides stay exact
+    docs = spark.createDataFrame(
+        [("web", 12_000_000_000_000), ("books", 3_000_000_000_001)],
+        "lang string, n_tokens long",
+    )
+    out = {r["source"]: r for r in mixture_plan(
+        docs, {"web": 700_001, "books": 299_999},
+        target_total_tokens=20_000_000_000_000,
+    ).collect()}
+    web, books = out["web"], out["books"]
+    # planned = 2e13 · w div 10^6; epochs = planned · 10^6 div available
+    assert (web["planned_tokens"], web["epochs_ppm"]) == (14_000_020_000_000, 1_166_668)
+    assert (books["planned_tokens"], books["epochs_ppm"]) == (5_999_980_000_000, 1_999_993)
+    assert web["repeated"] is True and books["repeated"] is True

@@ -4,6 +4,9 @@ q_bitext_mine) does the cross-engine value-hash check; these tests pin the
 hand-checkable semantics and the scale-shape invariants.
 """
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 TOTAL = 10**12
@@ -343,6 +346,18 @@ def test_quantize_embeddings_values(spark):
     assert all(-127 <= v <= 127 for r in rows.values() for v in r["qvec"])
 
 
+def test_quantize_embeddings_clamps_rounding_past_127(spark):
+    from html_parser_spark.ops.similarity import quantize_embeddings
+
+    # fl(fl(-0.3 * 127) / 0.3) = -127.00000000000001 in IEEE double, so a
+    # bare floor gives -128; the clamp keeps the int8 range
+    assert (-0.3 * 127.0) / 0.3 < -127.0
+    vecs = spark.createDataFrame(
+        [(0, [-0.3, 0.1])], "vec_id long, embedding array<double>"
+    )
+    assert quantize_embeddings(vecs).collect()[0]["qvec"] == [-127, 42]
+
+
 def test_quantized_topk_ranks_by_integer_cosine(spark):
     from html_parser_spark.ops.similarity import quantized_topk
 
@@ -574,3 +589,27 @@ def test_term_blocklist_first_hit_deterministic(spark):
     r = term_blocklist_flags(docs, ["zzz", "aaa"]).collect()[0]
     # sorted intersection: the lexicographically first hit, not list order
     assert r["blocked_term"] == "aaa"
+
+
+def test_term_blocklist_empty_list_blocks_nothing(spark):
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = spark.createDataFrame(
+        [(1, "anything at all"), (2, None)], "doc_id long, text string"
+    )
+    out = term_blocklist_flags(docs, [])
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,blocked:boolean,blocked_term:string>"
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, False, ""), (2, False, ""),
+    ]
+
+
+@pytest.mark.parametrize("term", ["bad word", "naïve", "e-mail", ""])
+def test_term_blocklist_rejects_terms_that_can_never_match(spark, term):
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=re.escape(repr(term))):
+        term_blocklist_flags(docs, ["ok", term])

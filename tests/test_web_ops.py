@@ -754,6 +754,33 @@ def test_sitemap_coverage_dedups_within_each_side(spark):
     assert (a["declared_n"], a["crawled_n"], a["both_n"]) == (1, 1, 1)
 
 
+def test_host_rollups_accept_mixed_case_schemes(spark):
+    from html_parser_spark.ops.web import mirror_candidates, sitemap_coverage
+
+    # schemes are case-insensitive (RFC 3986): HTTPS:// and Http:// urls
+    # belong to their host, not to one bogus empty-host row
+    declared = spark.createDataFrame(
+        [("HTTPS://a.com/1",), ("Http://a.com/2",)], "url string"
+    )
+    crawled = spark.createDataFrame(
+        [("https://a.com/2",), ("hTTp://B.com/1",)], "url string"
+    )
+    rows = {r["host"]: r for r in sitemap_coverage(declared, crawled).collect()}
+    assert set(rows) == {"a.com", "b.com"}
+    assert (rows["a.com"]["declared_n"], rows["a.com"]["crawled_n"]) == (2, 1)
+    assert rows["b.com"]["crawled_n"] == 1
+
+    pages = spark.createDataFrame(
+        [("HTTPS://a.com/x",), ("Http://a.com/y",),
+         ("https://b.com/x",), ("HTTP://b.com/y",)],
+        "url string",
+    )
+    r = mirror_candidates(pages, df_cap=10, min_shared=2).collect()
+    assert [(x["host_a"], x["host_b"], x["shared_paths"]) for x in r] == [
+        ("a.com", "b.com", 2)
+    ]
+
+
 def test_extract_job_text_links_sidecar(spark, tmp_path, capsys):
     """--text-links mines urls cited in the EXTRACTED text into a
     (url, out_url) parquet sidecar and the report counts the links."""
