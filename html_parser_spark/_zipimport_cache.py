@@ -8,11 +8,14 @@ each task paid ~0.25 CPU-s (4-vCPU x86 VM, CPython 3.11) before any row
 was processed.  CPython 3.13 made ``zipimporter.invalidate_caches`` lazy;
 this module gives older interpreters the same effect.
 
-The replacement re-reads only when the archive's ``(st_mtime_ns, st_size)``
-differs from what it was just before the last read, or when
-``zipimport._zip_directory_cache`` no longer holds the archive.  A zip that
-is rewritten (a re-shipped ``--py-files`` archive, say) is therefore still
-re-read, and import semantics are unchanged.  Importing the package
+The replacement re-reads only when the archive's ``(st_ino, st_size,
+st_mtime_ns, st_ctime_ns)`` differs from what it was just before the last
+read, or when ``zipimport._zip_directory_cache`` no longer holds the
+archive.  A zip that is rewritten (a re-shipped ``--py-files`` archive,
+say) is therefore still re-read: replacing it by rename changes the inode,
+and writing it in place changes the ctime, which, unlike the mtime, no
+copy or unzip tool can set back.  Only a rewrite that lands within one
+ctime tick of the last read, keeping the size, could go unseen.  Importing the package
 installs it, so every reused worker that unpickles one of the package's
 UDFs skips the re-read from its second task on.
 """
@@ -23,8 +26,9 @@ import os
 import sys
 import zipimport
 
-# archive path -> (st_mtime_ns, st_size), stat-ed just before its last read
-_stat_at_read: dict[str, tuple[int, int] | None] = {}
+# archive path -> (st_ino, st_size, st_mtime_ns, st_ctime_ns), stat-ed just
+# before its last read
+_stat_at_read: dict[str, tuple[int, int, int, int] | None] = {}
 
 
 def _install() -> None:
@@ -36,7 +40,7 @@ def _install() -> None:
         """Re-read the archive's directory only if the file changed."""
         try:
             st = os.stat(self.archive)
-            key = (st.st_mtime_ns, st.st_size)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
         except OSError:
             key = None
         unchanged = key is not None and _stat_at_read.get(self.archive) == key

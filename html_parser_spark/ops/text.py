@@ -867,10 +867,6 @@ def term_blocklist_flags(
             raise ValueError(
                 f"blocklist term {t!r} is not one [a-z0-9] token; it can never match"
             )
-    if not tl:
-        return docs.select(
-            "doc_id", F.lit(False).alias("blocked"), F.lit("").alias("blocked_term")
-        )
     toks = F.filter(
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^a-z0-9]+"),
         lambda x: F.length(x) > 0,
